@@ -95,9 +95,12 @@ def fenced_filter(df: DataFrame, cond: Column) -> DataFrame:
     Spark upgrade that changes PushDownPredicates must fail CI loudly,
     not degrade silently back to duplicated evaluation.
     """
+    # Spark resolves column names case-insensitively by default, so an
+    # existing ``_FENCE`` collides with ``_fence`` as well.
+    taken = {c.lower() for c in df.columns}
     fence = "_fence"
     i = 0
-    while fence in df.columns:
+    while fence in taken:
         i += 1
         fence = f"_fence{i}"
     return (

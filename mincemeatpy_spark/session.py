@@ -10,6 +10,13 @@ is also the right call on a real cluster:
 - Arrow on: every Pandas-UDF path ships columnar batches, not pickled rows.
 - session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle (and are deployment-independent).
+- Python workers fork from ``worker_daemon``, not ``pyspark.daemon``:
+  PySpark calls ``importlib.invalidate_caches()`` before every task, and
+  before Python 3.13 that re-reads the whole directory of every archive
+  on the worker's path (``pyspark.zip``, the spark-core jar) once per
+  importer — ~0.25 s of CPU per task.  The daemon re-reads an archive
+  only when it changed; Python 3.13 made the re-read lazy, so there the
+  daemon is the stock one.
 """
 
 from __future__ import annotations
@@ -52,11 +59,16 @@ def get_spark(
     # the first streaming query pays a full worker respawn (~2 s,
     # measured r9).  With the path stable from the start,
     # ensure_protobuf's guard sees it present and never mutates.
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pbshim")
+    # The package's parent directory rides along so the worker daemon
+    # module below starts whatever the driver's cwd is.
+    package = os.path.dirname(os.path.abspath(__file__))
+    shim = os.path.join(package, "pbshim")
     builder = builder.config(
         "spark.executorEnv.PYTHONPATH",
-        shim + os.pathsep + os.environ.get("PYTHONPATH", ""),
-    )
+        os.pathsep.join(
+            [shim, os.path.dirname(package), os.environ.get("PYTHONPATH", "")]
+        ),
+    ).config("spark.python.daemon.module", "mincemeatpy_spark.worker_daemon")
     if os.environ.get("SPARK_GRAFT_CBO_STATS") == "1":
         # CBO flags must be on BEFORE planning; the stats themselves
         # come from tables.bootstrap_cbo_statistics (same flag).
