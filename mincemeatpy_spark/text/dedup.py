@@ -70,6 +70,11 @@ _ORACLE_SHINGLES = """
 
 
 def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, base): each document's distinct 3-word shingles as 60-bit
+    hashes.  Shingle strings die here, so every join and shuffle
+    downstream carries (doc_id, int64) — 8-byte keys, primitive-equality
+    probes (collisions are 2^-60-rare and engine-symmetric: the oracles
+    hash identically)."""
     # fan_out: shingling is the expensive per-row stage; never leave it
     # serialized on an under-split scan (no-op on wide scans at scale).
     docs = fan_out(
@@ -78,6 +83,7 @@ def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.filter(F.size("w") >= 3)
         .select("doc_id", F.explode(_shingles(F.col("w"))).alias("s"))
+        .select("doc_id", _hash60(F.col("s")).alias("base"))
     )
 
 
@@ -161,16 +167,12 @@ def dedup_exact_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     "that dedup_minhash_lsh approximates at scale.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
+    sh = _shingle_df(spark, sf_dir).cache()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b, (F.col("a.base") == F.col("b.base")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .agg(F.count(F.lit(1)).alias("i"))
     )
@@ -190,10 +192,20 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_HASHES = 16
 _BAND_SIZE = 4  # 4 bands of 4 → candidate if any band signature collides
 
-# One md5 per shingle; the 16 MinHash functions are affine transforms
-# h_i(x) = (x*a_i + b_i) mod P over the Mersenne prime P=2^31-1 (the
-# standard universal-hash family for MinHash).  Integer-exact in any
-# engine, and one digest per shingle instead of one per (shingle, seed).
+# The signature format, defined once here for every MinHash query and
+# its oracle:
+# - shingles: ``base``, the 60-bit hash of each distinct 3-word shingle
+#   (_shingle_df; oracle: _ORACLE_SHINGLES + _ORACLE_H60);
+# - minima: m0..m15, the per-doc minimum of h_i(base) = (base*a_i + b_i)
+#   mod P over the Mersenne prime P=2^31-1, the standard universal-hash
+#   family for MinHash — integer-exact in any engine, one md5 per shingle
+#   instead of one per (shingle, seed) (_minhash; oracle: _minh_cols_sql);
+# - bands: _N_HASHES/rows bands of ``rows`` minima, the band's ``sig`` the
+#   comma-joined minima — 4x4 everywhere, plus 2x8 in the band tradeoff
+#   (_bands; oracle: _oracle_bands);
+# - candidates: the band-collision self-join on (band, sig) with
+#   ba.doc_id < bb.doc_id (_band_pairs), verified by exact intersection
+#   counts over the hashed shingles (_lsh_verify_candidates).
 #
 # The 16 minima are computed as 16 aggregate columns in ONE groupBy —
 # no seed crossJoin, so the shuffle carries |shingle rows| partial aggs,
@@ -210,44 +222,70 @@ def _affine(i: int) -> str:
     return f"((base % {_P}) * {_A[i]} + {_B[i]}) % {_P}"
 
 
-def _band_sig_sql(b: int) -> str:
-    """Band signature: comma-joined minima of the band's 4 seeds."""
-    parts = [f"m{i}::VARCHAR" for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE)]
-    return " || ',' || ".join(parts)
+def _minh_cols_sql() -> str:
+    """Oracle twin of _minhash's 16 minima (without ``n``)."""
+    return ", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))
+
+
+def _oracle_bands(
+    src: str = "minh", cols: str = "doc_id", rows: int = _BAND_SIZE
+) -> str:
+    """Oracle twin of _bands: one UNION ALL branch per band of ``src``."""
+    return " UNION ALL ".join(
+        f"SELECT {cols}, {b} AS band, "
+        + " || ',' || ".join(f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows))
+        + f" AS sig FROM {src}"
+        for b in range(_N_HASHES // rows)
+    )
+
+
+def _minhash(based: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15, n): one pass over the hashed shingles computes
+    the 16 minima AND the set size — sizes ride along instead of a
+    second shingle-scale aggregate."""
+    return based.groupBy("doc_id").agg(
+        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+def _bands(minh: DataFrame, keep: list[str], rows: int = _BAND_SIZE) -> DataFrame:
+    """One (band, sig) row per band per doc, carrying the ``keep`` columns."""
+    stack_args = ", ".join(
+        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * rows, (b + 1) * rows))})"
+        for b in range(_N_HASHES // rows)
+    )
+    return minh.selectExpr(
+        *keep, f"stack({_N_HASHES // rows}, {stack_args}) AS (band, sig)"
+    )
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Band-collision self-join: rows of aliases ``ba`` and ``bb`` sharing
+    a (band, sig) bucket, ba.doc_id < bb.doc_id.  No forced broadcast:
+    the band table scales with the corpus; AQE picks broadcast at
+    runtime while it actually fits."""
+    ba, bb = bands.alias("ba"), bands.alias("bb")
+    return ba.join(
+        bb,
+        (F.col("ba.band") == F.col("bb.band"))
+        & (F.col("ba.sig") == F.col("bb.sig"))
+        & (F.col("ba.doc_id") < F.col("bb.doc_id")),
+    )
 
 
 def _minhash_band_rows(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared front half of the MinHash-LSH family: hashed shingles
-    (``based``) and band-signature rows (``bands``), each band row
-    carrying the doc's shingle-set size ``n``."""
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
-    # One pass over the hashed shingles computes the 16 minima AND the
-    # set size — sizes ride along instead of a second 260k-row agg.
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    )
-    n_bands = _N_HASHES // _BAND_SIZE
-    stack_args = ", ".join(
-        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE))})"
-        for b in range(n_bands)
-    )
+    """Hashed shingles (``based``) and 4x4 band rows (``bands``), each band
+    row carrying the doc's shingle-set size ``n``."""
+    based = _shingle_df(spark, sf_dir).cache()
     # Band rows CARRY the doc's shingle-set size (+8 bytes each), so the
     # candidate pairs emerge with both sizes attached and the Jaccard
     # denominator needs NO join back to a doc-count-sized size table —
     # at 1B docs that table is way past broadcast range, so the old
-    # shape's two size joins were two extra keyed shuffles.  No forced
-    # broadcast on the self-join either: the band table scales with the
-    # corpus; AQE picks broadcast at runtime while it actually fits.
-    bands = minh.selectExpr(
-        "doc_id", "n", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-    )
+    # shape's two size joins were two extra keyed shuffles.
+    bands = _bands(_minhash(based), ["doc_id", "n"])
     # r13 optimization round: every consumer references the band table
     # at least twice (the candidate self-join; the capped twin adds the
     # bucket-count rollup), and each reference re-ran the 16-way min
@@ -256,26 +294,33 @@ def _minhash_band_rows(
     # (doc_id, n, band, sig) — 4 narrow columns, vocab-scale, cheap to
     # hold (guide §2.4: share one computation instead of re-deriving it
     # per branch).
-    from mincemeatpy_spark.lineage import truncate_lazy
-
     return based, bands.transform(truncate_lazy)
 
 
-def _lsh_verify_candidates(based: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact-jaccard verification restricted to LSH candidates (shared
-    by the capped and uncapped ops): join candidate pairs back to their
-    (hashed) shingle sets — verification work scales with |candidates|,
-    not with all co-shingled pairs (the whole point of LSH at 100 TB)."""
+def _lsh_verify_candidates(based: DataFrame, bands: DataFrame) -> DataFrame:
+    """(d1, d2, n1, n2, i): exact shingle-intersection counts of the
+    distinct band-collision pairs of ``bands`` (doc_id, n, band, sig).
+    Candidate pairs join back to their hashed shingle sets, so
+    verification work scales with |candidates|, not with all co-shingled
+    pairs (the whole point of LSH at 100 TB)."""
+    cand = (
+        _band_pairs(bands)
+        .select(
+            F.col("ba.doc_id").alias("d1"),
+            F.col("bb.doc_id").alias("d2"),
+            F.col("ba.n").alias("n1"),
+            F.col("bb.n").alias("n2"),
+        )
+        .distinct()
+    )
     a = based.alias("a")
     b = based.alias("b")
-    inter = (
+    return (
         cand.join(a, F.col("a.doc_id") == F.col("d1"))
         .join(b, (F.col("b.doc_id") == F.col("d2")) & (F.col("b.base") == F.col("a.base")))
         .groupBy("d1", "d2", "n1", "n2")
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
-    return inter.select("d1", "d2", F.round(jac, 6).alias("jaccard"))
 
 
 @register(
@@ -288,11 +333,11 @@ def _lsh_verify_candidates(based: DataFrame, cand: DataFrame) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands()}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -328,25 +373,9 @@ def _lsh_verify_candidates(based: DataFrame, cand: DataFrame) -> DataFrame:
     "in the collision case.)",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based, bands = _minhash_band_rows(spark, sf_dir)
-    ba = bands.alias("ba")
-    bb = bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"),
-            F.col("bb.doc_id").alias("d2"),
-            F.col("ba.n").alias("n1"),
-            F.col("bb.n").alias("n2"),
-        )
-        .distinct()
-    )
-    return _lsh_verify_candidates(based, cand)
+    inter = _lsh_verify_candidates(*_minhash_band_rows(spark, sf_dir))
+    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
+    return inter.select("d1", "d2", F.round(jac, 6).alias("jaccard"))
 
 
 _BAND_CAP = 50  # LSH buckets with more members than this are hot bands
@@ -362,12 +391,12 @@ _BAND_CAP = 50  # LSH buckets with more members than this are hot bands
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))},
+                   {_minh_cols_sql()},
                    count(*) AS n
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, n, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands(cols="doc_id, n")}
         ),
         bc AS (
             SELECT band, sig, count(*) AS cnt
@@ -436,24 +465,11 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("CAST(cnt * (cnt - 1) DIV 2 AS BIGINT)")), F.lit(0)
         ).cast("bigint").alias("pairs_skipped"),
     )
-    ba = keptb.alias("ba")
-    bb = keptb.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"),
-            F.col("bb.doc_id").alias("d2"),
-            F.col("ba.n").alias("n1"),
-            F.col("bb.n").alias("n2"),
-        )
-        .distinct()
+    inter = _lsh_verify_candidates(based, keptb)
+    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
+    return inter.select("d1", "d2", F.round(jac, 6).alias("jaccard")).crossJoin(
+        F.broadcast(acct)
     )
-    return _lsh_verify_candidates(based, cand).crossJoin(F.broadcast(acct))
 
 
 # --- 4. SimHash --------------------------------------------------------
@@ -1088,7 +1104,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))},
+                   {_minh_cols_sql()},
                    count(*) AS n
             FROM based GROUP BY doc_id
         ),
@@ -1132,15 +1148,8 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, and minh feeds two aliases — cache/checkpoint so the
     # expensive scan/split/explode/md5 stage runs once, not ~5x (the
     # same reason the siblings cache based / checkpoint minh).
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    ).transform(truncate_lazy)
+    based = _shingle_df(spark, sf_dir).cache()
+    minh = _minhash(based).transform(truncate_lazy)
     a = based.alias("a")
     b = based.alias("b")
     inter = (
@@ -1488,15 +1497,11 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no pair joins anywhere.",
 )
 def text_novelty_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
-    first_seen = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
+    sh = _shingle_df(spark, sf_dir).cache()
+    first_seen = sh.groupBy("base").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (
-        sh.join(first_seen, "s")
+        sh.join(first_seen, "base")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
@@ -1538,18 +1543,14 @@ def text_novelty_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unchanged (band on the contained side's signature).",
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
+    sh = _shingle_df(spark, sf_dir).cache()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
         a.join(
             b,
-            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") != F.col("b.doc_id")),
+            (F.col("a.base") == F.col("b.base")) & (F.col("a.doc_id") != F.col("b.doc_id")),
         )
         .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .agg(F.count(F.lit(1)).alias("i"))
@@ -1735,11 +1736,11 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands()}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1842,11 +1843,6 @@ def contrastive_pairs_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_sig_sql_rows(b: int, rows: int) -> str:
-    parts = [f"m{i}::VARCHAR" for i in range(b * rows, (b + 1) * rows)]
-    return " || ',' || ".join(parts)
-
-
 @register(
     "dedup_lsh_band_tradeoff",
     oracle=f"""
@@ -1854,7 +1850,7 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
         shh AS (SELECT doc_id, {_ORACLE_H60.format(x='s')} AS base FROM sh),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM shh GROUP BY doc_id
         ),
         sizes AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
@@ -1870,7 +1866,7 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
             WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.25
         ),
         bands_44 AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql_rows(b, 4)} AS sig FROM minh" for b in range(4))}
+            {_oracle_bands(rows=4)}
         ),
         cand_44 AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1878,7 +1874,7 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
               ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
         ),
         bands_28 AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql_rows(b, 8)} AS sig FROM minh" for b in range(2))}
+            {_oracle_bands(rows=8)}
         ),
         cand_28 AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1914,18 +1910,11 @@ def _band_sig_sql_rows(b: int, rows: int) -> str:
     "Signatures are computed once; each banding is a cheap re-stack.",
 )
 def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
+    based = _shingle_df(spark, sf_dir).cache()
     # Both configs and all six counts reuse the signature table and the
     # exact truth; localCheckpoint materializes each once instead of
     # re-running the quadratic truth join per count (measured ~2x).
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    ).transform(truncate_lazy)
+    minh = _minhash(based).transform(truncate_lazy)
     sizes = minh.select("doc_id", "n")
     a, b = based.alias("a"), based.alias("b")
     inter = (
@@ -1941,29 +1930,13 @@ def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("d1", "d2")
     ).transform(truncate_lazy)
 
-    def candidates(n_bands: int, rows: int):
-        stack_args = ", ".join(
-            f"{bi}, concat_ws(',', {', '.join(f'm{i}' for i in range(bi * rows, (bi + 1) * rows))})"
-            for bi in range(n_bands)
-        )
-        bands = minh.selectExpr(
-            "doc_id", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-        )
-        ba, bb = bands.alias("ba"), bands.alias("bb")
-        return (
-            ba.join(
-                bb,
-                (F.col("ba.band") == F.col("bb.band"))
-                & (F.col("ba.sig") == F.col("bb.sig"))
-                & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-            )
+    out = None
+    for config, rows in (("4x4", 4), ("2x8", 8)):
+        cand = (
+            _band_pairs(_bands(minh, ["doc_id"], rows))
             .select(F.col("ba.doc_id").alias("d1"), F.col("bb.doc_id").alias("d2"))
             .distinct()
         )
-
-    out = None
-    for config, nb, rows in (("4x4", 4, 4), ("2x8", 2, 8)):
-        cand = candidates(nb, rows)
         n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
         n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
         n_hit = truth.join(cand, ["d1", "d2"]).agg(
@@ -1998,11 +1971,11 @@ def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands()}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -2097,17 +2070,13 @@ _DF_CAP = 50  # shingles appearing in more docs than this are stop-shingles
     "8-byte hash; everything else is the exact pipeline's shape.",
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("s"))
-        .cache()
-    )
-    df = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    kept = sh.join(df.filter(F.col("df") <= _DF_CAP), "s").select("doc_id", "s")
+    sh = _shingle_df(spark, sf_dir).cache()
+    df = sh.groupBy("base").agg(F.count(F.lit(1)).alias("df"))
+    kept = sh.join(df.filter(F.col("df") <= _DF_CAP), "base").select("doc_id", "base")
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = kept.alias("a"), kept.alias("b")
     inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b, (F.col("a.base") == F.col("b.base")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .agg(F.count(F.lit(1)).alias("i"))
     )
@@ -2210,9 +2179,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair, so the output IS the distinct set and the pair-level
     # exchange is gone).  Proven at sf1 (probes/r13/simhash_minband_ab.py):
     # identical 105,157,386 rows, zero dup pairs, exceptAll empty both
-    # ways; 101-112 s -> 42-46 s (2.4x).  The same trick is why banded
-    # MinHash emits `min_band` in dedup_minhash_lsh's candidates.
-    ba, bb = bands.alias("ba"), bands.alias("bb")
+    # ways; 101-112 s -> 42-46 s (2.4x).
     hamming = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
 
     def _band_match(j: int):
@@ -2228,12 +2195,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(3))
     )
     return (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
+        _band_pairs(bands)
         .select(
             F.col("ba.band").alias("band"),
             F.col("ba.doc_id").alias("d1"),
@@ -2274,11 +2236,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM (SELECT doc_id, s AS base FROM shh) GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands()}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -2521,12 +2483,12 @@ def text_substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM (SELECT doc_id, s AS base FROM (SELECT doc_id, base AS s FROM based))
             GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands()}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -2568,50 +2530,8 @@ def text_substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is identical.  Verification touches candidates only.",
 )
 def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based = (
-        _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("base"))
-        .cache()
-    )
-    minh = based.groupBy("doc_id").agg(
-        *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)],
-        F.count(F.lit(1)).alias("n"),
-    )
-    n_bands = _N_HASHES // _BAND_SIZE
-    stack_args = ", ".join(
-        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE))})"
-        for b in range(n_bands)
-    )
-    # Band rows carry the shingle-set size, so the candidate pairs emerge
-    # with both denominators attached — no joins back to a doc-count-
-    # sized size table, and nothing corpus-scale is force-broadcast
-    # (AQE picks broadcast at runtime while sides fit).
-    bands = minh.selectExpr(
-        "doc_id", "n", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-    )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.sig") == F.col("bb.sig"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"),
-            F.col("bb.doc_id").alias("d2"),
-            F.col("ba.n").alias("n1"),
-            F.col("bb.n").alias("n2"),
-        )
-        .distinct()
-    )
-    a, b = based.alias("a"), based.alias("b")
-    inter = (
-        cand.join(a, F.col("a.doc_id") == F.col("d1"))
-        .join(b, (F.col("b.doc_id") == F.col("d2")) & (F.col("b.base") == F.col("a.base")))
-        .groupBy("d1", "d2", "n1", "n2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
+    based = _shingle_df(spark, sf_dir).cache()
+    inter = _lsh_verify_candidates(based, _bands(_minhash(based), ["doc_id", "n"]))
     fwd = inter.select(
         F.col("d1").alias("contained_doc"),
         F.col("d2").alias("container_doc"),
@@ -2638,10 +2558,6 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EST_MATCH_MIN = 8  # signature agreement >= 8/16 ~ estimated Jaccard 0.5
 
 
-def _minh_cols_sql() -> str:
-    return ", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))
-
-
 def _matches_sql(a: str, b: str) -> str:
     return " + ".join(
         f"(CASE WHEN {a}.m{i} = {b}.m{i} THEN 1 ELSE 0 END)"
@@ -2658,10 +2574,10 @@ def _matches_sql(a: str, b: str) -> str:
         bm AS (SELECT * FROM minh WHERE doc_id % 10 = 0),
         im AS (SELECT * FROM minh WHERE doc_id % 10 <> 0),
         bb AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM bm" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands("bm")}
         ),
         ib AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM im" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands("im")}
         ),
         cand_idx AS (
             SELECT DISTINCT b.doc_id AS bd, i.doc_id AS idx
@@ -2720,21 +2636,13 @@ def _matches_sql(a: str, b: str) -> str:
     "Fixture split: doc_id % 10 == 0 is the incoming batch.",
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    based = _shingle_df(spark, sf_dir).select(
-        "doc_id", _hash60(F.col("s")).alias("base")
-    )
-    minh = based.groupBy("doc_id").agg(
+    # Minima without ``n``: the triage verifies by signature agreement,
+    # never by Jaccard, so no set size is carried.
+    minh = _shingle_df(spark, sf_dir).groupBy("doc_id").agg(
         *[F.min(F.expr(_affine(i))).alias(f"m{i}") for i in range(_N_HASHES)]
     ).transform(truncate_lazy)
-    n_bands = _N_HASHES // _BAND_SIZE
-    stack_args = ", ".join(
-        f"{b}, concat_ws(',', {', '.join(f'm{i}' for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE))})"
-        for b in range(n_bands)
-    )
     is_batch = F.col("doc_id") % 10 == 0
-    bands = minh.selectExpr(
-        "doc_id", f"stack({n_bands}, {stack_args}) AS (band, sig)"
-    )
+    bands = _bands(minh, ["doc_id"])
     bb = bands.filter(is_batch)
     ib = bands.filter(~is_batch)
 
@@ -3082,23 +2990,21 @@ _PPJ_NUM, _PPJ_DEN = 1, 2
     "scales with candidates, not corpus².",
 )
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _shingle_df(spark, sf_dir).select(
-        "doc_id", _hash60(F.col("s")).alias("s")
-    )
-    dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    # per-doc shingle set in global (df, s) order: arr drives the
+    sh = _shingle_df(spark, sf_dir)
+    dfreq = sh.groupBy("base").agg(F.count(F.lit(1)).alias("df"))
+    # per-doc shingle set in global (df, base) order: arr drives the
     # prefix; sarr (values only) is the verify payload carried ONCE per
     # doc, so verification is a per-pair array_intersect in codegen,
     # never a per-shingle fan-out join (measured 59x-on-10x-data blowup
     # in the first cut — BENCH_sf1.json r7_additions, NOTES_r07.md).
     ranked = (
-        sh.join(dfreq, "s")
+        sh.join(dfreq, "base")
         .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "s"))).alias("arr"))
+        .agg(F.array_sort(F.collect_list(F.struct("df", "base"))).alias("arr"))
         .select(
             "doc_id",
             F.size("arr").alias("n"),
-            F.expr("transform(arr, x -> x.s)").alias("sarr"),
+            F.expr("transform(arr, x -> x.base)").alias("sarr"),
             "arr",
         )
         .transform(truncate_eager)
@@ -3111,7 +3017,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n",
         F.posexplode(F.expr(f"slice(arr, 1, {pref_len})")).alias("idx", "p"),
-    ).select("doc_id", "n", "idx", F.col("p.s").alias("s"))
+    ).select("doc_id", "n", "idx", F.col("p.base").alias("base"))
     a, b = pref.alias("a"), pref.alias("b")
     # candidate generation with BOTH classic in-join prunes evaluated at
     # hash-probe time (before any shuffle of pair rows):
@@ -3131,7 +3037,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         a.join(
             b,
-            (F.col("a.s") == F.col("b.s"))
+            (F.col("a.base") == F.col("b.base"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
                 F.least("a.n", "b.n") * _PPJ_DEN

@@ -20,13 +20,12 @@ from mincemeatpy_spark.registry import QUERIES, register
 from mincemeatpy_spark.tables import t
 from mincemeatpy_spark.text.analysis import tokens
 from mincemeatpy_spark.text.dedup import (
-    _BAND_SIZE,
-    _N_HASHES,
     _ORACLE_H60,
     _ORACLE_SHINGLES,
-    _affine,
-    _band_sig_sql,
     _hash60,
+    _minh_cols_sql,
+    _oracle_bands,
+    _shingle_df,
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
 )
@@ -125,11 +124,11 @@ def _finish_pipeline(quality: DataFrame, losers: DataFrame) -> DataFrame:
         ),
         minh AS (
             SELECT doc_id,
-                   {", ".join(f"min({_affine(i)}) AS m{i}" for i in range(_N_HASHES))}
+                   {_minh_cols_sql()}
             FROM based GROUP BY doc_id
         ),
         bands AS (
-            {" UNION ALL ".join(f"SELECT doc_id, {b} AS band, {_band_sig_sql(b)} AS sig FROM minh" for b in range(_N_HASHES // _BAND_SIZE))}
+            {_oracle_bands()}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -1330,8 +1329,6 @@ def corpus_select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(vector_quantize_int8's kernel shape), keep the plan.",
 )
 def rag_chunk_index_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.text.dedup import _hash60
-
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", r"\s+").alias("w")
     ).filter(F.size("w") >= 1)
@@ -1473,8 +1470,6 @@ def rag_chunk_index_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast hints: every table here scales with the corpus.",
 )
 def corpus_split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mincemeatpy_spark.text.dedup import _shingle_df
-
     h = _hash60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(h < 90, F.lit("train"))
@@ -1488,17 +1483,16 @@ def corpus_split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus tokens, the usual trade).
     sh = (
         _shingle_df(spark, sf_dir)
-        .select("doc_id", _hash60(F.col("s")).alias("sh"))
         .withColumn("split", split)
         .distinct()
         .transform(truncate_lazy)
     )
-    ss = sh.select("split", "sh").distinct().transform(truncate_lazy)
+    ss = sh.select("split", "base").distinct().transform(truncate_lazy)
     a, b = ss.alias("a"), ss.alias("b")
     shared = (
         a.join(
             b,
-            (F.col("a.sh") == F.col("b.sh"))
+            (F.col("a.base") == F.col("b.base"))
             & (F.col("a.split") != F.col("b.split")),
         )
         .groupBy(
@@ -1510,7 +1504,7 @@ def corpus_split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.alias("d")
         .join(
             ss.alias("a2"),
-            (F.col("a2.sh") == F.col("d.sh"))
+            (F.col("a2.base") == F.col("d.base"))
             & (F.col("a2.split") != F.col("d.split")),
         )
         .groupBy(

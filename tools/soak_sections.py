@@ -2,8 +2,9 @@
 
 The main soak (tools/soak_sf1.py) covers HEADLINE + the heaviest
 non-streaming EXTENDED queries.  This tool runs an arbitrary named list
-at both scales with the same best-of-2 / noop-sink protocol and merges
-the result as a section of BENCH_sf1.json — used for the round-7 query
+at both scales with the same best-of-2 / noop-sink protocol (``soak``
+below, which soak_sf1.py imports) and merges the result as a section
+of BENCH_sf1.json — used for the round-7 query
 additions and the streaming EXTENDED family (trigger-latency-dominated,
 so the expected sf1/sf0.1 ratio is ~1x: batch COUNT, not data volume,
 sets their wall time; a big ratio would mean state or shuffle grows
@@ -30,36 +31,31 @@ BENCH_SF1 = os.path.join(
 )
 
 
-def main() -> None:
-    section, names = sys.argv[1], sys.argv[2:]
-    sf_small = os.environ.get("SOAK_BASE_DIR", "/root/testdata/sf0.1")
-    sf_big = os.environ.get("SOAK_BIG_DIR", "/tmp/sfscale/sf1")
+def best_of(spark, fn, sf_dir: str, runs: int = 2) -> float:
+    """Best-of-``runs`` wall seconds of ``fn(spark, sf_dir)`` into a noop
+    sink.  Every run starts from an empty cache (cleared outside the
+    timed region, as in bench.py), so no run times a cache hit on an
+    intermediate that the previous run cached."""
+    best = float("inf")
+    for _ in range(runs):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 3)
 
-    spark = get_spark("mincemeatpy-soak-sections")
-    queries = load_all_queries()
-    missing = [n for n in names if n not in queries]
-    assert not missing, f"unknown queries: {missing}"
 
-    def best_of(name: str, sf_dir: str, runs: int = 2) -> float:
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            queries[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    # session warm-up at both scales (codegen + parquet footers)
+def soak(spark, queries, names, sf_small: str, sf_big: str) -> dict[str, dict[str, float]]:
+    """Warm the session at both scales (codegen + parquet footers), then
+    time each query at each scale: ``{name: {sf0.1_sec, sf1_sec, ratio}}``."""
     for sf in (sf_small, sf_big):
         queries["tpch_q1_pricing_summary"].fn(spark, sf).write.format(
             "noop"
         ).mode("overwrite").save()
-
     out: dict[str, dict[str, float]] = {}
     for name in names:
-        small = best_of(name, sf_small)
-        big = best_of(name, sf_big)
+        small = best_of(spark, queries[name].fn, sf_small)
+        big = best_of(spark, queries[name].fn, sf_big)
         out[name] = {
             "sf0.1_sec": small,
             "sf1_sec": big,
@@ -70,6 +66,20 @@ def main() -> None:
             file=sys.stderr,
             flush=True,
         )
+    return out
+
+
+def main() -> None:
+    section, names = sys.argv[1], sys.argv[2:]
+    sf_small = os.environ.get("SOAK_BASE_DIR", "/root/testdata/sf0.1")
+    sf_big = os.environ.get("SOAK_BIG_DIR", "/tmp/sfscale/sf1")
+
+    spark = get_spark("mincemeatpy-soak-sections")
+    queries = load_all_queries()
+    missing = [n for n in names if n not in queries]
+    assert not missing, f"unknown queries: {missing}"
+
+    out = soak(spark, queries, names, sf_small, sf_big)
 
     with open(BENCH_SF1) as f:
         doc = json.load(f)

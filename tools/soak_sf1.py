@@ -3,7 +3,8 @@
 Runs the 16 HEADLINE queries plus the 5 heaviest non-streaming EXTENDED
 queries at BOTH sf0.1 and the generated sf1 (tools/gen_sf.py), same
 session, same noop-sink materialization as bench.py, best-of-2 per
-(query, sf) so one-off codegen compile doesn't pollute the ratio.
+(query, sf) so one-off codegen compile doesn't pollute the ratio, each
+run from an empty cache (tools/soak_sections.py:soak).
 
 Writes BENCH_sf1.json: per-query seconds at each scale and the
 sf1/sf0.1 wall-time ratio.  The pass criterion is NO SUPERLINEAR
@@ -19,13 +20,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EXTENDED, HEADLINE  # noqa: E402
 from mincemeatpy_spark.registry import load_all_queries  # noqa: E402
 from mincemeatpy_spark.session import get_spark  # noqa: E402
+from tools.soak_sections import soak  # noqa: E402
 
 NON_STREAMING_EXTENDED = [
     "text_suffix_array",
@@ -45,35 +46,7 @@ def main() -> None:
     spark = get_spark("mincemeatpy-soak")
     queries = load_all_queries()
 
-    def best_of(name: str, sf_dir: str, runs: int = 2) -> float:
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            queries[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    # warm the session (codegen cache, parquet footers) once per scale
-    queries["tpch_q1_pricing_summary"].fn(spark, sf_small).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    queries["tpch_q1_pricing_summary"].fn(spark, sf_big).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    out: dict[str, dict[str, float]] = {}
-    for name in names:
-        small = best_of(name, sf_small)
-        big = best_of(name, sf_big)
-        out[name] = {
-            "sf0.1_sec": small,
-            "sf1_sec": big,
-            "ratio": round(big / small, 2),
-        }
-        print(f"{name}: {small:.2f}s -> {big:.2f}s  ({out[name]['ratio']}x)",
-              file=sys.stderr, flush=True)
+    out = soak(spark, queries, names, sf_small, sf_big)
 
     result = {
         "metric": "sf1_soak",
